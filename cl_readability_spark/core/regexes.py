@@ -36,12 +36,6 @@ NEGATIVE = re.compile(
     re.I,
 )
 
-# regex.lisp:21-22 — REGEXPS.extraneous (upstream _cleanMatchedNodes)
-EXTRANEOUS = re.compile(
-    r"print|archive|comment|discuss|e[\-]?mail|share|reply|all|login|sign|single|utility",
-    re.I,
-)
-
 # regex.lisp:24-25 — REGEXPS.byline
 BYLINE = re.compile(r"byline|author|dateline|writtenby|p-author", re.I)
 

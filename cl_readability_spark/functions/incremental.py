@@ -49,9 +49,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_EXACT_META_COLS = ("kind", "n_buckets")
-_MINHASH_META_COLS = ("kind", "n_buckets", "k", "n_hashes", "bands", "seed")
-
 
 def _normalized_fingerprint(text_col: str):
     # the curate() exact-gate normalization (functions/curation.py)

@@ -32,12 +32,15 @@ the probe reads only plan TEXT and file METADATA:
   relation) follows the session's shuffle parallelism — leave it;
 - a pure scan chain's effective parallelism is bounded by its files'
   parquet ROW-GROUP count (a row group cannot split), read from the
-  footers driver-side — no Spark job either way.
+  footers driver-side — no Spark job either way;
+- a scan of non-``file:`` URIs (object storage, HDFS) has footers the
+  driver cannot open locally — leave it.
 """
 
 from __future__ import annotations
 
 import re
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 
@@ -103,6 +106,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         # in-memory source (createDataFrame/range): sliced by
         # defaultParallelism already
         return df
+    if any(urlsplit(f).scheme not in ("", "file") for f in files):
+        return df  # footers not readable locally: split count unknown
     if _scan_row_groups(files, min_partitions) >= min_partitions:
         return df
     return df.repartition(min_partitions)

@@ -72,7 +72,6 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 C4_INTRA_WS = r"[ \t\f\r]"  # intra-line ws (NOT \x0b: VT is word-
 #                             internal, matching gopher_flags' class)
 C4_NONWS = r"[^ \t\f\r\n]"  # one word character (non-ws, non-newline)
-C4_TERMINAL_PUNCT = '.!?"”'  # period ! ? straight + curly end quote
 C4_JS_LINE_RE = r"(?i:[^\n]*javascript[^\n]*)"
 C4_NO_TERMINAL_RE = r"[^\n]*[^ \t\f\r\n.!?\"”]" + C4_INTRA_WS + "*"
 C4_SENTENCE_RE = r"[.!?]+"  # sentence-terminal runs (count heuristic)
@@ -108,8 +107,6 @@ def c4_badword_re(badwords) -> str:
 
     alts = "|".join(_re.escape(w) for w in badwords)
     return f"(?:^|[^a-z0-9])(?:{alts})(?:[^a-z0-9]|$)"
-
-TOKEN_RE = r"\w+|[^\w\s]"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,7 +31,8 @@ def build_spark(
     arrow_max_records: int = 512,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # unset: the cores this process may run on, not a fixed worker count
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -50,3 +50,17 @@ def test_probe_is_action_free(spark, tmp_path):
     ensure_parallelism(df)
     ensure_parallelism(base.select("id"))
     assert acc.value == 0
+
+
+def test_noop_for_non_local_file_uris(spark, tmp_path):
+    """Footers are read with local file APIs, so a scan of object-storage
+    URIs has an unknown split count and is left as planned."""
+    path = str(tmp_path / "remote.parquet")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    local = df.inputFiles()
+    assert all(f.startswith("file:") for f in local)
+    df.inputFiles = lambda: [f.replace("file:", "s3a://bucket", 1) for f in local]
+    assert ensure_parallelism(df) is df
+    df.inputFiles = lambda: local
+    assert ensure_parallelism(df) is not df
